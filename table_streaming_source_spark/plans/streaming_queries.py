@@ -86,9 +86,11 @@ def q_streaming_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     TTL-managed customer snapshot inside ``foreachBatch``, enriched rows
     appended to a sink, then aggregated per (segment, event_type).
 
-    Exercises the full production path — file stream source → snapshot
-    broadcast join → parquet sink — and still hash-matches the batch SQL
-    because the union of per-batch inner joins equals the batch join.
+    Exercises the full production path — file stream source → broadcast
+    join against the cached snapshot (each batch is the smaller side, so
+    its rows are the broadcast build and the snapshot is probed in place)
+    → parquet sink — and still hash-matches the batch SQL because the
+    union of per-batch inner joins equals the batch join.
     """
     from table_streaming_source_spark.snapshot import SnapshotManager
     from table_streaming_source_spark.streaming.enrichment import (

@@ -13,16 +13,20 @@ re-expression:
   epoch-aligned refresh arithmetic identical to `TableInputDStream.scala:57`;
 - unlike the reference (which leaks the old cached RDD on refresh —
   `TableInputDStream.scala:59` replaces the reference without freeing), we
-  ``unpersist`` the previous snapshot on swap;
+  ``unpersist`` the previous snapshot on swap — *before* persisting the
+  new one, because Spark's cache is keyed by plan and two scans of one
+  path plan equal: exactly one cache entry is live per generation;
 - ``start()`` zeroes the refresh clock forcing a fresh scan on (re)start,
-  matching `TableInputDStream.scala:42-45`.
+  matching `TableInputDStream.scala:42-45`;
+- :meth:`SnapshotManager.stats` reports refresh count, last load time,
+  snapshot age and whether the snapshot is actually cached.
 
 At 100 TB the snapshot side of an enrichment join is a *dimension* table —
-small relative to the stream.  ``persist`` keeps it hot across micro-batches;
-for multi-executor clusters the enrichment join should broadcast it
-(``F.broadcast``) when under the broadcast threshold, which
-:func:`table_streaming_source_spark.streaming.enrichment.enrich_stream`
-does automatically.
+small relative to the stream.  ``persist`` keeps it hot across
+micro-batches, so a batch reads it from the block manager and never from
+the source files;
+:func:`table_streaming_source_spark.streaming.enrichment.start_enriched_stream`
+broadcasts whichever join side is smaller.
 """
 
 from __future__ import annotations
@@ -102,8 +106,9 @@ class SnapshotManager:
     Every call to :meth:`current` within a TTL window returns the *same*
     persisted DataFrame (the reference returns the same cached RDD to every
     intervening batch, `TableInputDStream.scala:51-54`); once wall-clock
-    passes the epoch-aligned boundary the table is re-scanned, the new
-    snapshot persisted, and the old one unpersisted.
+    passes the epoch-aligned boundary the old snapshot is unpersisted and
+    the table re-scanned and persisted.  A load that fails leaves no cache
+    entry behind, and the next :meth:`current` loads again.
 
     ``clock_ms`` is injectable for deterministic tests (the reference's
     equivalent is the batch ``validTime`` passed into ``compute``,
@@ -130,6 +135,7 @@ class SnapshotManager:
         self.eager = eager
         self._df: Optional[DataFrame] = None
         self._last_refresh_ms = 0
+        self._last_load_s: Optional[float] = None
         self.refresh_count = 0
 
     @classmethod
@@ -176,17 +182,38 @@ class SnapshotManager:
         # first access always refreshes (`TableInputDStream.scala:58`:
         # ``lastRefreshTime == 0 || currentTime > threshold``)
         if self._df is None or self._last_refresh_ms == 0 or now_ms > threshold:
-            old = self._df
+            # the reference leaks the old snapshot (`TableInputDStream.scala:59`).
+            # Free it FIRST: the cache is keyed by plan, so persisting an
+            # equal-plan reload next to it is a no-op and unpersisting the
+            # old one afterwards would drop the only entry.
+            self.stop()
+            t0 = time.perf_counter()
             new = self._loader().persist(self._storage_level)
-            if self.eager:
-                new.count()  # materialize the cache eagerly
+            try:
+                if self.eager:
+                    new.count()  # materialize the cache eagerly
+            except BaseException:
+                new.unpersist()
+                raise
+            self._last_load_s = time.perf_counter() - t0
             self._df = new
             self._last_refresh_ms = now_ms
             self.refresh_count += 1
-            if old is not None:
-                # the reference leaks here (`TableInputDStream.scala:59`);
-                # we free the old snapshot once the new one is in place.
-                old.unpersist()
+
+    def stats(self) -> dict:
+        """The refresh contract, made visible: ``refresh_count`` loads so
+        far, ``last_load_s`` (scan + persist, plus the materializing count
+        when eager), ``age_s`` of the current snapshot on the manager's
+        clock, and ``cached`` — whether Spark's cache actually holds it
+        (read from the DataFrame's storage level, not assumed)."""
+        live = self._df is not None
+        return {
+            "refresh_count": self.refresh_count,
+            "last_load_s": self._last_load_s,
+            "age_s": (self._clock_ms() - self._last_refresh_ms) / 1000
+            if live else None,
+            "cached": live and self._df.storageLevel != StorageLevel.NONE,
+        }
 
     def stop(self) -> None:
         """Release the cached snapshot."""

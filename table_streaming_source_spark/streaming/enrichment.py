@@ -10,13 +10,21 @@ re-scans every batch — exactly the cost the reference's TTL cache avoids
 gives both: per-batch currency at TTL granularity, scan cost amortized
 across the TTL window.
 
-Scale: the snapshot is broadcast by default (dimension-table contract), so
-the enrichment join never shuffles the stream side — on a 1000-executor
-cluster each micro-batch stays embarrassingly parallel.
+Scale: with ``broadcast_snapshot`` (the default) both join sides carry a
+broadcast hint and Spark builds the hash table from the *smaller* one by
+its size statistics.  An inner join against a file-source micro-batch
+builds the few-KB batch and probes the cached snapshot in place, so a
+batch costs what the batch holds, not what the snapshot holds; outer,
+semi and anti joins, and sources without size statistics (rate, Kafka),
+build the snapshot as before.  Either way the stream side never
+shuffles — on a 1000-executor cluster each micro-batch stays
+embarrassingly parallel — and the broadcast stays bounded by the
+dimension, which is bounded by design.
 """
 
 from __future__ import annotations
 
+import logging
 from typing import Callable, Optional, Sequence, Union
 
 from pyspark.sql import DataFrame
@@ -24,6 +32,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from table_streaming_source_spark.snapshot import SnapshotManager
+
+_log = logging.getLogger(__name__)
 
 
 def start_enriched_stream(
@@ -52,9 +62,20 @@ def start_enriched_stream(
     batches serve from the block manager and never re-touch source files —
     an in-place overwrite of the dimension table (non-atomic: delete +
     rewrite) cannot fail a batch that way.  If a batch still fails (e.g.
-    the overwrite raced the refresh scan itself), the manager is reset and
-    the batch retried once against a fresh scan; a second failure
-    propagates and stops the query.
+    the overwrite raced the refresh scan itself), the failure is logged
+    as a warning with the batch id, the manager is reset and the batch
+    retried once against a fresh scan; a second failure propagates and
+    stops the query.
+
+    Build side: with ``broadcast_snapshot`` both sides are hinted and
+    Spark broadcasts the smaller one — the micro-batch when an inner
+    join's batch reports a smaller size than the snapshot, else the
+    snapshot (always for ``left``/``left_semi``/``left_anti``, which can
+    only build the right side, and for sources without size statistics).
+    ``broadcast_snapshot=False`` hints neither side and leaves the
+    strategy to ``autoBroadcastJoinThreshold`` and AQE, which may shuffle
+    the stream side.  The output columns are those of
+    ``batch_df.join(snapshot, on, how)`` either way.
     """
     snapshot.start()
     snapshot.eager = True
@@ -62,14 +83,18 @@ def start_enriched_stream(
     def process(batch_df: DataFrame, batch_id: int) -> None:
         for attempt in (1, 2):
             try:
-                dim = snapshot.current()
+                left, dim = batch_df, snapshot.current()
                 if broadcast_snapshot:
-                    dim = F.broadcast(dim)
-                sink(batch_df.join(dim, on, how), batch_id)
+                    left, dim = F.broadcast(left), F.broadcast(dim)
+                sink(left.join(dim, on, how), batch_id)
                 return
             except Exception:
                 if attempt == 2:
                     raise
+                _log.warning(
+                    "enrichment batch %d failed; retrying once against a "
+                    "fresh snapshot scan", batch_id, exc_info=True,
+                )
                 snapshot.start()  # force fresh scan; stale files likely gone
 
     writer = stream.writeStream.foreachBatch(process)

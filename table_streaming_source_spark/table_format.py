@@ -1744,6 +1744,42 @@ def _snapshot_deletes(
     return key, out
 
 
+def _cast_to_table_types(
+    spark: SparkSession,
+    path: str,
+    pairs: list[tuple[dict, tuple]],
+    df: DataFrame,
+) -> DataFrame:
+    """``df`` with every column the table also has cast to the table's
+    current logical type; other columns, and a ``df`` that already
+    matches, pass through unchanged.  The types come from the commit
+    log's recorded file schemas when no schema op applies (no Spark
+    work), else from the era-aware read's schema."""
+    from pyspark.sql import functions as F
+
+    if not pairs:
+        return df
+    fps = [os.path.join(path, f["path"]) for f, _ in pairs]
+    table = None
+    if not any(ch for _, ch in pairs):
+        table = _recorded_schema(path, fps)
+    if table is None:
+        table = _read_era_groups(
+            spark, path, [(fp, ch) for fp, (_, ch) in zip(fps, pairs)]
+        ).schema
+    want = {f.name: f.dataType for f in table.fields}
+    cast = {
+        f.name for f in df.schema.fields
+        if want.get(f.name, f.dataType) != f.dataType
+    }
+    if not cast:
+        return df
+    return df.select([
+        F.col(c).cast(want[c]).alias(c) if c in cast else F.col(c)
+        for c in df.columns
+    ])
+
+
 def commit_merge(
     spark: SparkSession,
     path: str,
@@ -1787,11 +1823,13 @@ def commit_merge(
     ``upsert=True`` passes through to ``merge_into``'s
     insert-or-update mode (matched → source wins, unmatched → insert)
     — the semantics of SQL ``MERGE ... WHEN MATCHED THEN UPDATE SET *
-    WHEN NOT MATCHED THEN INSERT *`` and of full-row-image CDC feeds."""
-    from pyspark.sql import functions as F
+    WHEN NOT MATCHED THEN INSERT *`` and of full-row-image CDC feeds.
 
-    from table_streaming_source_spark.snapshot import merge_into
-
+    The batch's columns are cast to the table's current types first, so
+    a CDC feed carrying a wider type (``bigint`` into an ``int`` column)
+    never commits files the next read cannot merge with the rest; a
+    value out of the column's range raises (ANSI cast) before anything
+    is written."""
     base, new_v = _resolve_write_target(path, branch, expected_version)
     if txn is not None:
         # re-validate the idempotence watermark AFTER the base is
@@ -1810,6 +1848,8 @@ def commit_merge(
                 f"txn {txn['app']}/{txn['batch']} already committed "
                 f"(watermark {prior}) — replayed batch"
             )
+    pairs, any_ops = _walk_files_renamed(path, base)
+    changes = _cast_to_table_types(spark, path, pairs, changes)
     # the CDC batch is consumed by up to three jobs (stats-overlap
     # probe, bloom probe, rewrite join) — without a pin the caller's
     # derivation (often an aggregate over a fact table, e.g. the
@@ -1839,7 +1879,7 @@ def commit_merge(
             spark, path, changes, key=key, stat_cols=stat_cols,
             op_col=op_col, row_id_col=row_id_col, branch=branch,
             txn=txn, bloom_cols=bloom_cols, upsert=upsert, base=base,
-            new_v=new_v,
+            new_v=new_v, pairs=pairs, any_ops=any_ops,
         )
     finally:
         if pin:
@@ -1861,12 +1901,13 @@ def _commit_merge_pinned(
     upsert: bool,
     base: int,
     new_v: int,
+    pairs: list[tuple[dict, tuple]],
+    any_ops: bool,
 ) -> tuple[int, int, int]:
     from pyspark.sql import functions as F
 
     from table_streaming_source_spark.snapshot import merge_into
 
-    pairs, any_ops = _walk_files_renamed(path, base)
     # era-aware targeting (round 15): decisions run on stats/bloom
     # keys TRANSLATED to current names, so a merge on a renamed key
     # keeps its stats-targeted file pruning across the rename

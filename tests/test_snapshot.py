@@ -287,3 +287,98 @@ def test_merge_into_empty_batch_is_identity(spark):
     source = spark.createDataFrame([], "k int, op string, s string, v double")
     got = sorted(map(tuple, merge_into(target, source, key="k").collect()))
     assert got == sorted(map(tuple, target.collect()))
+
+
+def _write_generation(directory, ids, label):
+    """Replace every parquet file in ``directory`` with one file holding
+    ``ids`` — an external (pyarrow, not Spark) writer overwriting the
+    dimension table in place."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    os.makedirs(directory, exist_ok=True)
+    for name in os.listdir(directory):
+        os.remove(os.path.join(directory, name))
+    pq.write_table(
+        pa.table({"id": list(ids), "label": [label] * len(ids)}),
+        os.path.join(directory, f"{label}.parquet"),
+    )
+
+
+def _refreshed_path_manager(spark, tmp_path):
+    """A path-loaded, eager manager after its first load and two
+    refreshes; each generation's files replace the previous ones.  Two
+    scans of one path plan equal, so they share one cache key."""
+    path = str(tmp_path / "dim")
+    clock = FakeClock(1_000)
+    mgr = SnapshotManager(spark, path, 5_000, clock_ms=clock, eager=True)
+    for gen, now_ms in enumerate((1_000, 6_000, 11_000), start=1):
+        _write_generation(path, range(gen * 10), f"gen{gen}")
+        clock.now_ms = now_ms
+        mgr.current()
+    assert mgr.refresh_count == 3
+    return mgr, clock, path
+
+
+def test_path_snapshot_stays_cached_across_refreshes(spark, tmp_path):
+    mgr, _, _ = _refreshed_path_manager(spark, tmp_path)
+    df = mgr.current()
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "InMemoryRelation" in plan
+    stats = mgr.stats()
+    assert stats["cached"] is True
+    assert stats["refresh_count"] == 3
+    assert stats["last_load_s"] > 0
+    assert stats["age_s"] == 0
+    mgr.stop()
+    assert mgr.stats()["cached"] is False
+
+
+def test_mid_ttl_overwrite_serves_cached_generation(spark, tmp_path):
+    mgr, clock, path = _refreshed_path_manager(spark, tmp_path)
+    # an external writer swaps the files inside the TTL window: the
+    # batch must be served from the cache, never from the deleted files
+    _write_generation(path, range(100), "gen4")
+    clock.now_ms = 12_000
+    rows = mgr.current().collect()
+    assert sorted(r.id for r in rows) == list(range(30))
+    assert {r.label for r in rows} == {"gen3"}
+    assert mgr.stats()["age_s"] == 1.0
+    mgr.stop()
+
+
+def test_failed_refresh_leaves_no_cache_entry(spark, tmp_path):
+    from pyspark.sql import functions as F
+    from pyspark.storagelevel import StorageLevel
+
+    path = str(tmp_path / "dim")
+    _write_generation(path, range(10), "gen1")
+    loaded = []
+    fail = {"on": False}
+
+    def loader():
+        df = spark.read.parquet(path)
+        if fail["on"]:
+            df = df.withColumn(
+                "label", F.when(F.col("id") >= 0, F.raise_error(F.lit("boom")))
+            )
+        loaded.append(df)
+        return df
+
+    clock = FakeClock(1_000)
+    mgr = SnapshotManager(spark, loader, 5_000, clock_ms=clock, eager=True)
+    mgr.current()
+    fail["on"] = True
+    clock.now_ms = 6_000
+    with pytest.raises(Exception, match="boom"):
+        mgr.current()
+    assert len(loaded) == 2
+    assert all(df.storageLevel == StorageLevel.NONE for df in loaded)
+    assert mgr.stats()["cached"] is False
+    # the next access reloads instead of serving a half-built snapshot
+    fail["on"] = False
+    assert mgr.current().count() == 10
+    assert len(loaded) == 3 and mgr.stats()["cached"] is True
+    mgr.stop()

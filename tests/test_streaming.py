@@ -7,6 +7,8 @@ source→sink stream, seed the table, poll the sink until it converges
 Plus enrichment-mode and watermark/window/stream-dedup coverage.
 """
 
+import logging
+import re
 import time
 
 import pytest
@@ -141,6 +143,145 @@ def test_enrichment_mode_ttl_refresh(spark, tmp_path):
     finally:
         q.stop()
         mgr.stop()
+
+
+def _broadcast_subtrees(plan: str) -> list[str]:
+    """The text of every ``BroadcastExchange`` subtree in a physical
+    plan's tree string: the exchange line plus the lines below it whose
+    node starts further right."""
+    lines = plan.splitlines()
+    out = []
+    for i, line in enumerate(lines):
+        col = line.find("BroadcastExchange")
+        if col < 0:
+            continue
+        sub = [line]
+        for nxt in lines[i + 1:]:
+            m = re.search(r"[A-Za-z*]", nxt)
+            if m is None or m.start() <= col:
+                break
+            sub.append(nxt)
+        out.append("\n".join(sub))
+    return out
+
+
+def _enrich_drain(spark, tmp_path, stream, dim, how, *, sink=None):
+    """Run ``start_enriched_stream`` over ``stream`` until every input is
+    consumed; returns (physical plan of each enriched batch, rows)."""
+    mgr = SnapshotManager(spark, lambda: dim, refresh_interval_ms=3_600_000)
+    plans, rows = [], []
+
+    def collect(df, batch_id):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        rows.extend(map(tuple, df.collect()))
+
+    q = start_enriched_stream(
+        stream, mgr, on="key", sink=sink or collect, how=how,
+        available_now=True, checkpoint=str(tmp_path / f"ckpt-{how}"),
+    )
+    try:
+        q.awaitTermination(120)
+    finally:
+        q.stop()
+        mgr.stop()
+    return plans, rows
+
+
+def _events_and_dim(spark, tmp_path):
+    """A 40-event file stream whose keys partly miss a 1000-row
+    dimension — the snapshot is the bigger side."""
+    events = str(tmp_path / "events")
+    spark.range(40).select(
+        (F.col("id") * 37 % 1200).alias("key"), F.col("id").alias("event")
+    ).coalesce(1).write.parquet(events)
+    dim = spark.range(1000).select(
+        F.col("id").alias("key"), F.format_string("l%d", "id").alias("label")
+    )
+    stream = spark.readStream.schema("key long, event long").parquet(events)
+    return events, dim, stream
+
+
+@pytest.mark.streaming
+@pytest.mark.parametrize(
+    ("how", "batch_built"), [("inner", True), ("left", False)]
+)
+def test_enrichment_builds_the_smaller_side(spark, tmp_path, how, batch_built):
+    """Both sides carry the broadcast hint, so an inner join against a
+    file-source batch builds the few-row batch and probes the cached
+    snapshot; a left join can only build the snapshot.  Either way the
+    enriched rows equal the static join."""
+    events, dim, stream = _events_and_dim(spark, tmp_path)
+    plans, rows = _enrich_drain(spark, tmp_path, stream, dim, how)
+    assert plans
+    for plan in plans:
+        (built,) = _broadcast_subtrees(plan)
+        assert ("InMemoryTableScan" in built) is not batch_built, plan
+        assert ("Scan ExistingRDD" in built) is batch_built, plan
+        assert "Exchange hashpartitioning" not in plan
+    want = spark.read.parquet(events).join(dim, "key", how)
+    assert sorted(rows, key=str) == sorted(map(tuple, want.collect()), key=str)
+
+
+@pytest.mark.streaming
+def test_enrichment_rate_source_builds_the_snapshot(spark, tmp_path):
+    """A rate source reports no size statistics, so the snapshot stays
+    the build side even for an inner join."""
+    dim = spark.range(1000).select(
+        F.col("id").alias("key"), F.format_string("l%d", "id").alias("label")
+    )
+    mgr = SnapshotManager(spark, lambda: dim, refresh_interval_ms=3_600_000)
+    plans, rows = [], []
+
+    def collect(df, batch_id):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        got = df.collect()
+        if got:
+            plans.append(plan)
+            rows.extend(got)
+
+    stream = (
+        spark.readStream.format("rate").option("rowsPerSecond", "20").load()
+        .select((F.col("value") % 50).alias("key"), F.col("value"))
+    )
+    q = start_enriched_stream(
+        stream, mgr, on="key", sink=collect, trigger="200 milliseconds"
+    )
+    try:
+        wait_for(lambda: len(plans) >= 2, message="enriched rate batches")
+    finally:
+        q.stop()
+        mgr.stop()
+    for plan in plans:
+        (built,) = _broadcast_subtrees(plan)
+        assert "InMemoryTableScan" in built, plan
+    # the static join of each event with its dimension row
+    assert rows and all(r.label == f"l{r.value % 50}" for r in rows)
+
+
+@pytest.mark.streaming
+def test_enrichment_retry_logs_first_failure(spark, tmp_path, caplog):
+    """A sink failing once is logged with its batch id and retried; the
+    batch reaches the sink exactly once."""
+    events, dim, stream = _events_and_dim(spark, tmp_path)
+    calls, delivered, rows = [], {}, []
+
+    def flaky(df, batch_id):
+        calls.append(batch_id)
+        if len(calls) == 1:
+            raise RuntimeError("sink down")
+        delivered[batch_id] = delivered.get(batch_id, 0) + 1
+        rows.extend(map(tuple, df.collect()))
+
+    logger = "table_streaming_source_spark.streaming.enrichment"
+    with caplog.at_level(logging.WARNING, logger=logger):
+        _enrich_drain(spark, tmp_path, stream, dim, "inner", sink=flaky)
+    warned = [r for r in caplog.records if r.name == logger]
+    assert len(warned) == 1 and warned[0].levelno == logging.WARNING
+    assert "batch 0 failed" in warned[0].getMessage()
+    assert "sink down" in str(warned[0].exc_info[1])
+    assert calls == [0, 0] and delivered == {0: 1}
+    want = spark.read.parquet(events).join(dim, "key")
+    assert sorted(rows) == sorted(map(tuple, want.collect()))
 
 
 @pytest.mark.streaming

@@ -4603,3 +4603,41 @@ def test_commit_cache_returns_stable_payloads(spark, tmp_path):
     c = {**a, "files": list(a["files"])}
     c["files"].append({"path": "poison", "rows": 0, "stats": {}})
     assert len(TF._read_commit(path, 1)["files"]) == len(a["files"])
+
+
+def test_merge_casts_widened_cdc_to_table_types(spark, tmp_path):
+    """A CDC batch whose value column is wider than the table's (bigint
+    into an int column) used to commit bigint files beside the int
+    ones, after which every read_table / read_cdf raised
+    CANNOT_MERGE_SCHEMAS.  The merge casts the batch to the table's
+    recorded types; an out-of-range value raises (ANSI cast) before
+    anything is committed."""
+    path = str(tmp_path / "narrow")
+    TF.create_table(path)
+    TF.commit_append(
+        spark, path,
+        spark.range(20).selectExpr("id as k", "cast(id as int) as n"),
+        stat_cols=["k"],
+    )                                                                # v1
+    changes = spark.createDataFrame(
+        [(1, 100, "U"), (2, None, "D"), (50, 500, "I")],
+        "k bigint, n bigint, op string",
+    )
+    v, _, _ = TF.commit_merge(
+        spark, path, changes, key="k", stat_cols=["k"]
+    )                                                                # v2
+    got = TF.read_table(spark, path)
+    assert dict(got.dtypes)["n"] == "int"
+    rows = {r.k: r.n for r in got.collect()}
+    assert len(rows) == 20 and rows[1] == 100 and rows[50] == 500
+    assert 2 not in rows
+    cdf = TF.read_cdf(spark, path, from_version=v - 1, to_version=v)
+    assert dict(cdf.dtypes)["n"] == "int"
+    assert cdf.count() > 0
+    too_wide = spark.createDataFrame(
+        [(3, 1 << 40, "U")], "k bigint, n bigint, op string"
+    )
+    with pytest.raises(Exception, match="CAST_OVERFLOW"):
+        TF.commit_merge(spark, path, too_wide, key="k", stat_cols=["k"])
+    assert TF.latest_version(path) == v
+    assert TF.read_table(spark, path).count() == 20
