@@ -139,13 +139,22 @@ def _tsr_chunks_from_batches(iterator) -> tuple[list[bytes], int]:
     """Arrow record batches → packed TSR1 record byte chunks (guide §4:
     columns cross the boundary, and the 24-byte records are assembled
     by one vectorized structured-array fill per batch — byte-identical
-    to the per-row ``_REC.pack`` loop in :func:`write_tsr`)."""
+    to the per-row ``_REC.pack`` loop in :func:`write_tsr`).  The
+    format has no null encoding, so a null in any column raises
+    ``ValueError`` before anything is staged (numpy would otherwise
+    turn it into NaN and then INT64_MIN)."""
     import numpy as np
 
     dt = np.dtype([("key", "<i8"), ("grp", "<i8"), ("value", "<f8")])
     chunks: list[bytes] = []
     n = 0
     for batch in iterator:
+        for name, col in zip(batch.schema.names, batch.columns):
+            if col.null_count:
+                raise ValueError(
+                    f"tsr records cannot hold nulls: column {name!r} "
+                    f"has {col.null_count}"
+                )
         arr = np.empty(batch.num_rows, dtype=dt)
         arr["key"] = batch.column(0).to_numpy(zero_copy_only=False)
         arr["grp"] = batch.column(1).to_numpy(zero_copy_only=False)

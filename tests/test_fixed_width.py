@@ -96,6 +96,26 @@ def test_writer_commit_protocol_and_directory_read(spark, tmp_path):
     assert not [n for n in os.listdir(out) if n.endswith(".tmp")]
 
 
+def test_writer_rejects_nulls_before_staging(spark, tmp_path):
+    """TSR records have no null encoding: a null key must fail the
+    write (not land as INT64_MIN) and publish no ``.tsr`` file."""
+    import os
+
+    out = str(tmp_path / "out")
+    FW.register(spark)
+    df = spark.createDataFrame(
+        [(None, 1, 1.0), (2, 2, 2.0)], "key long, grp long, value double"
+    ).repartition(1)
+    with pytest.raises(Exception, match="null"):
+        df.write.format("tsr").mode("overwrite").option("path", out).save()
+    published = (
+        [n for n in os.listdir(out) if n.endswith(".tsr")]
+        if os.path.isdir(out)
+        else []
+    )
+    assert published == []
+
+
 def test_stream_writer_commit_is_idempotent_per_batch(tmp_path):
     """Checkpoint recovery replays the last micro-batch: a second
     commit of the same batchId must discard its stage, not

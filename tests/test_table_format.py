@@ -1944,6 +1944,21 @@ def test_positional_delete_unknown_file_raises(spark, ranged_table):
         TF.commit_delete_positions(spark, path, bogus)
 
 
+def test_positional_delete_unknown_file_leaves_no_staging(
+    spark, ranged_table
+):
+    """A refused positional delete removes the delete file it staged:
+    the data dir lists exactly what it listed before the call."""
+    path, _ = ranged_table
+    before = sorted(os.listdir(TF._data_dir(path)))
+    bogus = spark.createDataFrame(
+        [("/nope/missing.parquet", 0)], "file_path string, pos long"
+    )
+    with pytest.raises(ValueError, match="outside snapshot"):
+        TF.commit_delete_positions(spark, path, bogus)
+    assert sorted(os.listdir(TF._data_dir(path))) == before
+
+
 def test_vacuum_keeps_positional_delete_files(spark, ranged_table):
     path, _ = ranged_table
     TF.commit_delete_positions(
@@ -3698,6 +3713,23 @@ def test_replace_where_touches_only_predicate_files(spark, tmp_path):
         )
     # time travel to before the replace still reads
     assert TF.read_table(spark, path, version=1).count() == 400
+
+
+def test_replace_where_violation_leaves_no_staging(spark, ranged_table):
+    """A refused replaceWhere removes BOTH directories it staged — the
+    straddling files' survivor rewrite and the incoming rows — so the
+    data dir lists exactly what it listed before the call."""
+    path, _ = ranged_table
+    before = sorted(os.listdir(TF._data_dir(path)))
+    with pytest.raises(ValueError, match="replaceWhere violation"):
+        TF.commit_replace_where(
+            spark, path,
+            spark.createDataFrame(
+                [(200, 0.0), (5, 0.0)], "k long, v double"
+            ),
+            col="k", lo=120, hi=320, stat_cols=["k"],
+        )
+    assert sorted(os.listdir(TF._data_dir(path))) == before
 
 
 def test_replace_where_conflicts_with_concurrent_append(spark, tmp_path):

@@ -10,11 +10,16 @@ confs can't leak in), builds a bare ``SparkSession.builder.master(...)
 .getOrCreate()``, and runs every catalog entry that reads through the
 Python-DataSource temp-view front door.  ``register_table_format``
 must make its own consumers safe (it now sets the pushdown conf
-itself — ``sources/format_batch.py``)."""
+itself — ``sources/format_batch.py``).
+
+The package reads a fixed set of ``SPARK_GRAFT_*`` settings; a guard
+below keeps a new environment switch from slipping in unnoticed."""
 
 from __future__ import annotations
 
 import os
+import pathlib
+import re
 import subprocess
 import sys
 
@@ -65,3 +70,20 @@ def test_datasource_temp_view_entries_on_bare_session():
     )
     for n in names.split(","):
         assert f"VANILLA-OK {n}" in proc.stdout
+
+
+def test_package_reads_only_the_known_env_settings():
+    """Every ``SPARK_GRAFT_*`` name the package mentions is one of the
+    four deployment settings; a pin or code path has no env switch."""
+    pkg = pathlib.Path(REPO) / "table_streaming_source_spark"
+    names = {
+        m
+        for f in pkg.rglob("*.py")
+        for m in re.findall(r"SPARK_GRAFT_[A-Z_]+", f.read_text())
+    }
+    assert names == {
+        "SPARK_GRAFT_CPUS",
+        "SPARK_GRAFT_SF_DIR",
+        "SPARK_GRAFT_AQE_PARALLELISM_FIRST",
+        "SPARK_GRAFT_AQE_ADVISORY_SIZE",
+    }
